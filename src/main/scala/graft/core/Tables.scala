@@ -25,7 +25,7 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   /** events.ts arrives in whatever physical type the generator used:
     * TIMESTAMP(NANOS) (a Long under
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/Bench/test
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/perfbench/test
     * sessions) or TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as
     * TIMESTAMP_NTZ). Normalize both to a microsecond TimestampType column
     * here so every downstream operator — in particular `withWatermark`,

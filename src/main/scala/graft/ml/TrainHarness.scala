@@ -76,6 +76,9 @@ object TrainHarness {
     finally if (own) df.unpersist()
   }
 
+  /** Fit bodies [[inParallel]] runs at once. */
+  private val SweepThreads = 4
+
   /** Run independent fit bodies CONCURRENTLY from a bounded thread pool,
     * preserving input order in the result (guide §2.6: Spark happily runs
     * several jobs at once inside one application; sweep fits are only
@@ -87,15 +90,11 @@ object TrainHarness {
     * input — scheduling order changes nothing but wall-clock.
     * Failures propagate: the first failed body rethrows at the join.
     */
-  private[graft] def inParallel[A, B](items: Seq[A], maxThreads: Int = 4)(f: A => B): Seq[B] = {
-    // escape hatch + A/B probe handle: -Dgraft.sweep.threads=1 restores
-    // the serial loop (results are identical either way; only wall moves)
-    val cap = sys.props.get("graft.sweep.threads").flatMap(_.toIntOption)
-      .getOrElse(maxThreads)
-    if (items.size <= 1 || cap <= 1) items.map(f)
+  private[graft] def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] = {
+    if (items.size <= 1) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(items.size, cap)))
+        math.min(items.size, SweepThreads))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try {
@@ -374,36 +373,5 @@ object TrainHarness {
     }.toDF("strategy", "n_train", "best_c", "cv_accuracy", "f1",
       "precision_", "recall", "accuracy", "auc_roc", "auc_pr",
       "tn", "fp", "fn", "tp")
-  }
-
-  /** The M16 benchmark: resampling strategy × metrics table. Returns one
-    * row per strategy with AUC-ROC and threshold metrics — the engine's
-    * top-level "query" (reference py:796-861 builds the same table).
-    */
-  def benchmark(
-      train: DataFrame, test: DataFrame,
-      idCol: String, featuresCol: String, labelCol: String,
-      seed: Long = 42L
-  ): DataFrame = {
-    val strategies: Seq[(String, DataFrame)] = Seq(
-      "base"       -> train,
-      "undersample" -> Resamplers.randomUndersample(train, labelCol, seed),
-      "oversample"  -> Resamplers.randomOversample(train, labelCol, seed),
-      "smote"       -> Resamplers.smote(train, idCol, labelCol, featuresCol, seed),
-      "nearmiss"    -> Resamplers.nearMiss(train, idCol, labelCol, featuresCol, seed)
-    )
-    val s = org.apache.spark.sql.SparkSession.active
-    import s.implicits._
-    strategies.map { case (name, resampled) =>
-      // AUC and threshold metrics are two actions over the same scored
-      // frame — cache it so the model transform (and everything above the
-      // cached feature table) runs once per strategy, not per metric
-      val scored = logisticL1Scores(resampled, test, featuresCol, labelCol).cache()
-      val auc = Metrics.aucRoc(scored, "score", labelCol)
-      val m = Metrics.thresholdMetrics(scored, "score", labelCol, 0.5).collect()(0)
-      scored.unpersist()
-      (name, auc, m.getAs[Double]("accuracy"), m.getAs[Double]("recall"),
-        m.getAs[Double]("precision_"), m.getAs[Double]("specificity"))
-    }.toDF("strategy", "auc_roc", "accuracy", "recall", "precision_", "specificity")
   }
 }

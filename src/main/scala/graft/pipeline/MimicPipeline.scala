@@ -22,7 +22,7 @@ object MimicPipeline {
 
   /** The 17 distinct ICD-9 category names (18 ranges, 'misc' twice). */
   val diagCats: Seq[String] =
-    graft.SparkEntry.icd9Ranges.map(_._3).distinct
+    graft.registry.Shared.icd9Ranges.map(_._3).distinct
 
   private val memo =
     new java.util.WeakHashMap[SparkSession, (DataFrame, Array[String])]()
@@ -96,7 +96,7 @@ object MimicPipeline {
         lit(999))
       val catCols = diagCats.map(c =>
         sum(when(col("cat") === c, 1.0).otherwise(0.0)).as(s"diag_$c"))
-      val cats = dg.withColumn("cat", graft.SparkEntry.icd9Category(code3))
+      val cats = dg.withColumn("cat", graft.registry.Shared.icd9Category(code3))
         .groupBy("HADM_ID")
         .agg(catCols.head, catCols.tail: _*)
       val pat = MimicSynth.patientsAt(s, f)
@@ -218,7 +218,7 @@ object MimicPipeline {
         .otherwise(substring(col("ICD9_CODE"), 1, 3).cast("int")),
       lit(999))
     val diagPairs = MimicSynth.diagnoses(s)
-      .withColumn("cat", graft.SparkEntry.icd9Category(code3))
+      .withColumn("cat", graft.registry.Shared.icd9Category(code3))
       .join(broadcast(train.select("HADM_ID", "y")), "HADM_ID")
       .groupBy(col("cat"), col("HADM_ID"), col("y"))
       .agg(count(lit(1)).as("v"))

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
 /** Helpers, memo caches, and shared SQL fragments the registry slices and
   * SparkEntry both read — moved verbatim from SparkEntry.scala in the r12
   * split (visibility widened from `private` to `private[graft]`, nothing
-  * else changed). SparkEntry keeps thin forwarders for the members that
-  * Bench, MimicPipeline, and the specs reference by their old paths.
+  * else changed). MimicPipeline and the specs reference its members
+  * directly.
   */
 private[graft] object Shared {
 
@@ -54,9 +54,9 @@ private[graft] object Shared {
     * and let retention policies re-derive from the labeling (the
     * production shape: a dedup pass labels once, many policies read it).
     *
-    * Timing semantics (BENCH_NOTES.md): Bench warms this memo, so the
+    * Timing semantics (BENCH_NOTES.md): a warmed memo makes the
     * d_dup_clusters / d_cluster_keep rows measure reads of the persisted
-    * labeling; the build cost lands in warmup_sec. Weak session keys
+    * labeling; the build cost lands in the warm-up. Weak session keys
     * (same as Features.memo): entries for stopped-and-GC'd sessions drop
     * away instead of pinning the session object for the process lifetime.
     */
@@ -149,7 +149,7 @@ private[graft] object Shared {
     * (the r7 verdict's `weak` call); with the memo the bench row measures
     * what the contract says, exactly the [[lshBaseIndexCached]]
     * treatment (an index rebuild is not maintenance). Build cost lands
-    * in Bench warmup, visibly.
+    * in the session's warm-up, visibly.
     */
   private[graft] val joinSnapMemo =
     new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()

@@ -90,7 +90,7 @@ object StreamOps {
   /** [[eventsStream]] over a REPLICATED landing directory — the
     * production-batch-size leg (r14, verdict #7). Every other
     * `ev_stream_*` row drains a single 2 MB file, so its wall IS the
-    * ~0.6-0.75 s/trigger fixed cost (see [[fixedOverheadProbe]]); this
+    * ~0.6-0.75 s/trigger fixed cost of a micro-batch; this
     * source stages `copies` identical event files and drains them at
     * `filesPerTrigger`, so one micro-batch carries copies x |events|
     * rows and the fixed cost amortizes into real aggregation work — the
@@ -200,39 +200,6 @@ object StreamOps {
       q.awaitTermination()
     }
     spark.table(queryName)
-  }
-
-  /** Near-empty micro-batch pipeline for measuring streaming FIXED
-    * overhead: a 5-row region file stream → one global count → memory
-    * sink, drained with the same `Trigger.AvailableNow` lifecycle every
-    * `ev_stream_*` query pays. The data volume is negligible, so the
-    * wall-clock of one run ≈ per-query stream setup cost (source
-    * listing, checkpoint dir, query start/stop, sink registration) —
-    * reported by Bench as `stream_fixed_sec` so a multi-second stream
-    * row on KB-scale test input reads as shared fixed cost, not a plan
-    * defect. At production scale this cost amortizes over unbounded
-    * input and is irrelevant; on a bounded sf0.1 drain it dominates.
-    */
-  def fixedOverheadProbe(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val path = s"$dir/region.parquet"
-    val schema = spark.read.parquet(path).schema
-    // keyed by applicationId so concurrent sessions benching the same sf
-    // on one host never share (and race on) a probe dir; deleted after
-    // the drain — the memory sink is fully materialized by then
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_stream_probe_${spark.sparkContext.applicationId}_${new java.io.File(dir).getName}")
-    java.nio.file.Files.createDirectories(srcDir)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(path), srcDir.resolve("region.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val counted = spark.readStream.schema(schema).parquet(srcDir.toString)
-      .groupBy().count()
-    try runToCompletion(counted, queryName)
-    finally {
-      java.nio.file.Files.deleteIfExists(srcDir.resolve("region.parquet"))
-      java.nio.file.Files.deleteIfExists(srcDir)
-    }
   }
 
   /** STREAMING build of the fixed-grid histogram sketch (the online twin

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   *   sbt "runMain graft.tools.DumpPlans /root/testdata/sf0.1 plans/r14 before q1,q2"
   *
-  * Session config matches Bench/Verify exactly (same master, shuffle
+  * Session config matches Verify exactly (same master, shuffle
   * partitions, TopKPerKey rule) so the dumped plan is the benched plan.
   */
 object DumpPlans {

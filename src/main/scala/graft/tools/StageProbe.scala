@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.StageProbe /root/testdata/sf0.1 <query> [reps]"
   *
   * Runs the query `reps` times (default 2 — rep 1 warms JIT/caches, later
-  * reps are the steady state; all reps are listed) with the exact Bench
+  * reps are the steady state; all reps are listed) with the exact Verify
   * session config, then prints one line per stage: wall, summed task time,
   * task count, shuffle read/write bytes, spill, and the stage's callsite.
   */

@@ -46,13 +46,13 @@ class PinHygieneSpec extends SparkSpecBase {
 
   for ((q, maxPins) <- releasePattern)
     test(s"$q: leaves at most $maxPins new pin(s), and re-running adds none") {
-      // mirror Bench's warmup contract: the SHARED session memos
+      // the SHARED session memos
       // (curation labeling, LSH base index) are state built once per
       // session, not a per-query leak — warm them so each query's own
       // pin budget stays ≤1
-      SparkEntry.curatedStagesCached(spark, sfDir)
-      SparkEntry.lshBaseIndexCached(spark, sfDir)
-      SparkEntry.joinSnapshotCached(spark, sfDir)
+      registry.Shared.curatedStagesCached(spark, sfDir)
+      registry.Shared.lshBaseIndexCached(spark, sfDir)
+      registry.Shared.joinSnapshotCached(spark, sfDir)
       val before = pinned
       SparkEntry.queries(q)(spark, sfDir).collect()
       val afterFirst = pinned

@@ -81,4 +81,31 @@ class TrainHarnessSpec extends SparkSpecBase {
       assert(math.abs(1.0 / (1.0 + math.exp(-margin)) - p) < 1e-6)
     }
   }
+
+  test("inParallel: results keep input order when bodies finish out of order") {
+    // body i waits for body i+1 to finish, so the bodies complete in
+    // reverse order; 4 items all fit the 4-thread pool at once
+    val items = Seq(0, 1, 2, 3)
+    val done = items.map(_ => new java.util.concurrent.CountDownLatch(1))
+    val finished = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val out = TrainHarness.inParallel(items) { i =>
+      if (i + 1 < items.size)
+        assert(done(i + 1).await(30, java.util.concurrent.TimeUnit.SECONDS), s"body ${i + 1} never finished")
+      finished.add(i)
+      done(i).countDown()
+      s"r$i"
+    }
+    assert(finished.toArray.toSeq == items.reverse)
+    assert(out == items.map(i => s"r$i"))
+  }
+
+  test("inParallel: an exception thrown by a body is rethrown to the caller") {
+    val e = intercept[IllegalStateException] {
+      TrainHarness.inParallel(Seq(1, 2, 3)) { i =>
+        if (i == 2) throw new IllegalStateException("fit 2 failed")
+        i
+      }
+    }
+    assert(e.getMessage == "fit 2 failed")
+  }
 }

@@ -37,7 +37,7 @@ class RowNumberTopKRuleSpec extends SparkSpecBase {
     RowNumberTopK.install(spark)
     try {
       graft.core.Tables.orders(spark, sfDir).createOrReplaceTempView("orders")
-      val df = spark.sql(graft.SparkEntry.windowTopSql)
+      val df = spark.sql(graft.registry.Shared.windowTopSql)
       val tree = df.queryExecution.optimizedPlan.toString
       assert(tree.contains("TopKPerKey"), s"rule did not fire on SQL form:\n$tree")
       // one row per customer, the max-price order
@@ -76,7 +76,7 @@ class RowNumberTopKRuleSpec extends SparkSpecBase {
     RowNumberTopK.install(spark)
     try {
       graft.core.Tables.orders(spark, sfDir).createOrReplaceTempView("orders")
-      val planStr = spark.sql(graft.SparkEntry.windowTopSql)
+      val planStr = spark.sql(graft.registry.Shared.windowTopSql)
         .queryExecution.executedPlan.toString
       assert(planStr.contains("TopKPerKey"), planStr)
       assert(!planStr.contains("WindowGroupLimit"),
